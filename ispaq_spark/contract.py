@@ -85,8 +85,9 @@ COMPILED_SCRUB_RULES: tuple[tuple[str, re.Pattern[str], str], ...] = tuple(
 PII_RULE_NAMES = ("email", "ssn", "phone", "ip")
 
 # Combined single-pass PII counter: one alternation instead of four regex
-# passes over every document (java.util.regex dominated the 32-thread
-# profile; each pass allocates a Matcher + String copy per row). Semantics:
+# passes over a document (each pass allocates a Matcher + String copy per
+# row). Every alternative needs a digit or '@', so the Spark side runs it
+# only on text holding one (heuristics.pii_count). Semantics:
 # leftmost-first alternation — overlapping matches across rule classes
 # count ONCE (num_pii is informational; no keep/drop threshold reads it,
 # and reference_impl counts with this same combined pattern).

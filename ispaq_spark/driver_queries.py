@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .contract import STOPWORDS
+from .functions.heuristics import stopword_count
 from .operators.dedup import shingles_of as _shingles_of
 
 
@@ -707,8 +708,7 @@ def q_sigfig(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Text analysis over `documents` (the training-data-pipeline layer)
 # ===========================================================================
 
-_EN = STOPWORDS["en"]
-_EN_SQL = "[" + ", ".join(f"'{w}'" for w in _EN) + "]"
+_EN_SQL = "[" + ", ".join(f"'{w}'" for w in STOPWORDS["en"]) + "]"
 
 
 @qdef(
@@ -733,7 +733,6 @@ def q_text_heuristics(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     n = F.size(toks)
-    sw = F.array(*[F.lit(x) for x in _EN])
     return d.select(
         "doc_id",
         n.cast("bigint").alias("word_count"),
@@ -741,9 +740,9 @@ def q_text_heuristics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_max(F.transform(toks, F.length)).cast("bigint").alias(
             "max_word_len"
         ),
-        r6(
-            F.size(F.filter(toks, lambda x: F.array_contains(sw, x))) / n
-        ).alias("stopword_ratio_en"),
+        r6(stopword_count(F.col("text"), "en") / n).alias(
+            "stopword_ratio_en"
+        ),
     )
 
 
@@ -1043,9 +1042,8 @@ def q_quality_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = t(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     n = F.size(toks)
-    sw = F.array(*[F.lit(x) for x in _EN])
     mwl = (F.length("text") - n + F.lit(1)) / n
-    swr = F.size(F.filter(toks, lambda x: F.array_contains(sw, x))) / n
+    swr = stopword_count(F.col("text"), "en") / n
     keep = (
         (n >= 15)
         & (n <= 100_000)
@@ -6509,11 +6507,7 @@ def q_weighted_sample_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side, and the cut is TakeOrdered (per-partition heaps, k-row
     driver merge); the corpus never exchanges."""
     d = t(spark, sf_dir, "documents").where(F.col("text").isNotNull())
-    toks = F.split("text", " ")
-    sw = F.array(*[F.lit(x) for x in _EN])
-    swr = F.size(F.filter(toks, lambda x: F.array_contains(sw, x))) / F.size(
-        toks
-    )
+    swr = stopword_count(F.col("text"), "en") / F.size(F.split("text", " "))
     qw = r6(F.lit(0.01) + swr)
     uni = (
         F.conv(

@@ -13,6 +13,14 @@ arithmetic + single IEEE-754 double divisions):
   stopword_ratio    = max_L |{t in tokens : t in STOPWORDS[L]}| / word_count
   symbol_word_ratio = regexp_count(text, SYMBOL) / word_count
   dup_5gram_frac    = 1 - distinct_5grams/total_5grams   (0.0 if < 5 words)
+  num_pii           = regexp_count(text, PII_COMBINED_PATTERN)
+
+where tokens = split(text, ' '). The Catalyst forms are chosen for speed
+but keep these values: stopword hits are one regex count per language
+over the space-padded text (stopword_count); 5-grams are compared by a
+rotate-xor hash of token xxhash64s (fivegram_col; ~n²/2^64 collision
+chance per document); symbols are counted by translate() (symbol_count);
+the PII regex runs only on text holding a digit or '@' (pii_count).
 """
 
 from __future__ import annotations
@@ -22,6 +30,7 @@ from pyspark.sql import functions as F
 
 from ..contract import (
     LANGS,
+    PII_COMBINED_PATTERN,
     SCRUB_RULES,
     STOPWORDS,
     THRESHOLDS,
@@ -45,57 +54,48 @@ def tokens_col(text: Column) -> Column:
     return F.split(text, " ")
 
 
-def stopword_hits(tokens: Column, lang: str) -> Column:
-    """Count (with duplicates) of tokens in the language's stopword set."""
-    sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
-    return F.size(F.filter(tokens, lambda t: F.array_contains(sw, t)))
-
-
-def stopword_hits_hashed(tok_h: Column, lang: str) -> Column:
-    """Same count over the xxhash64'd token array: the stopword set becomes
-    a constant-folded literal array of longs (xxhash64(lit) is foldable),
-    so per-token membership is ≤|SW| long compares instead of string
-    compares — ~5x cheaper across the 5-language cascade. Collision risk
-    per corpus ~ |tokens|·|SW|/2^64 (the same accepted tradeoff as the
-    hashed 5-gram shingles)."""
-    sw = F.array(*[F.xxhash64(F.lit(w)) for w in STOPWORDS[lang]])
-    return F.size(F.filter(tok_h, lambda h: F.array_contains(sw, h)))
+def stopword_count(text: Column, lang: str) -> Column:
+    """Count (with duplicates) of ``split(text, ' ')`` tokens in the
+    language's stopword set, as ONE regex pass with no lambda: every token of
+    ``' ' || text || ' '`` sits between two spaces, so ``' (?:w1|...)(?= )'``
+    matches exactly once per token equal to a stopword (the match consumes
+    the token's leading space only, so adjacent hits never overlap). Exact
+    string equality, like reference_impl.langid; stopwords are plain
+    lowercase words, so no regex escaping is needed."""
+    pat = " (?:" + "|".join(STOPWORDS[lang]) + ")(?= )"
+    padded = F.concat(F.lit(" "), text, F.lit(" "))
+    return F.regexp_count(padded, F.lit(pat))
 
 
 def token_hash_col(tokens: Column) -> Column:
-    """Per-token xxhash64 array. MUST be materialized as a real column
-    before feeding fivegram_col: higher-order functions are interpreted
-    (never codegen'd) and never CSE'd, so an inline transform() closed over
-    by the shingle lambda would re-hash EVERY token for EVERY shingle
-    position — O(n²) per document (observed as XXH64 dominating jstack at
-    300k docs)."""
+    """Per-token xxhash64 array, the input of fivegram_col. MUST be
+    materialized as a real column first: fivegram_col slices it five
+    times, and an inline transform() (interpreted, never CSE'd) would
+    re-hash every token once per slice."""
     return F.transform(tokens, lambda t: F.xxhash64(t))
+
+
+def _rotl13(h: Column) -> Column:
+    return F.shiftleft(h, 13).bitwiseXOR(F.shiftrightunsigned(h, 51))
 
 
 def fivegram_col(tok_h: Column, n: Column) -> Column:
     """5-gram shingle *hash* array — allocation-light distinct counting.
 
-    Building the n shingle STRINGS per document (~30 UTF-16 chars each)
-    made GC the scaling bottleneck at 32 threads; instead each token hash
-    (precomputed once in `tok_h`, see token_hash_col) combines with 4
-    successors via rotate-xor (pure long ops, ANSI-overflow-safe).
-    Collision probability per doc is ~n²/2^64 — the exact-string reference
-    parity tests stay exact in practice."""
-    return F.when(
-        n >= 5,
-        F.transform(
-            F.sequence(F.lit(1), n - F.lit(4)),
-            lambda i: _combine5(tok_h, i),
-        ),
-    )
-
-
-def _combine5(tok_h: Column, i: Column) -> Column:
-    acc = F.element_at(tok_h, i)
+    Shingle i folds token hashes i..i+4 with rotate-xor
+    (h <- rotl13(h) ^ next; pure long ops, ANSI-overflow-safe). The fold
+    runs over whole arrays: four chained zip_with passes, each combining
+    the accumulator with ``tok_h`` shifted by one more position — O(n) per
+    document with a two-argument lambda per element, instead of building
+    n shingle strings. Collision probability per doc is ~n²/2^64 — the
+    exact-string reference parity tests stay exact in practice. NULL when
+    there are fewer than 5 tokens (the slices would be empty or invalid)."""
+    m = n - F.lit(4)
+    acc = F.slice(tok_h, F.lit(1), m)
     for j in range(1, 5):
-        rot = F.shiftleft(acc, 13).bitwiseXOR(F.shiftrightunsigned(acc, 51))
-        acc = rot.bitwiseXOR(F.element_at(tok_h, i + F.lit(j)))
-    return acc
+        nxt = F.slice(tok_h, F.lit(j + 1), m)
+        acc = F.zip_with(acc, nxt, lambda a, b: _rotl13(a).bitwiseXOR(b))
+    return F.when(n >= 5, acc)
 
 
 def symbol_count(text: Column) -> Column:
@@ -107,13 +107,12 @@ def symbol_count(text: Column) -> Column:
 
 
 def pii_count(text: Column) -> Column:
-    """ONE combined-alternation regexp_count instead of four passes — regex
-    Matcher allocation per pass per row was the dominant JVM cost at 32
-    threads (contract.PII_COMBINED_PATTERN; reference_impl.count_pii uses
-    the same pattern, so parity is exact)."""
-    from ..contract import PII_COMBINED_PATTERN
-
-    return F.regexp_count(text, F.lit(PII_COMBINED_PATTERN)).cast("long")
+    """ONE combined-alternation regexp_count (contract.PII_COMBINED_PATTERN;
+    reference_impl.count_pii uses the same pattern, so parity is exact),
+    run only on text that holds a digit or '@': every PII rule needs one,
+    so the cheap guard is exact and most documents skip the regex."""
+    count = F.regexp_count(text, F.lit(PII_COMBINED_PATTERN))
+    return F.when(text.rlike("[0-9@]"), count).otherwise(F.lit(0)).cast("long")
 
 
 def tox_count(text: Column) -> Column:
@@ -131,8 +130,7 @@ def with_heuristics(df: DataFrame, text_col: str = "text") -> DataFrame:
     df = df.withColumn(TOKENS, F.when(text.isNotNull(), tokens_col(text)))
     toks = F.col(TOKENS)
     n = F.size(toks)
-    # One hash pass over the tokens feeds BOTH langid and the 5-gram
-    # shingles; materialized as a column so no HOF recomputes it (see
+    # Materialized once for the five slices of fivegram_col (see
     # token_hash_col).
     df = df.withColumn(TOK_H, token_hash_col(toks))
 
@@ -148,11 +146,8 @@ def with_heuristics(df: DataFrame, text_col: str = "text") -> DataFrame:
     # stopword hit count / word count. pred_lang/lang_conf are NO LONGER
     # produced here — they come from the fastText-capability classifier
     # (functions/langid.py), decoupling lang_conf from stopword_ratio.
-    hit_cols = {lang: f"_sw_{lang}" for lang in LANGS}
-    for lang, c in hit_cols.items():
-        df = df.withColumn(c, stopword_hits_hashed(F.col(TOK_H), lang))
-    best = F.greatest(*[F.col(c) for c in hit_cols.values()])
-    df = df.withColumn("stopword_ratio", best / n).drop(*hit_cols.values())
+    best = F.greatest(*[stopword_count(text, lang) for lang in LANGS])
+    df = df.withColumn("stopword_ratio", best / n)
 
     df = df.withColumn("symbol_word_ratio", symbol_count(text) / n)
     df = df.withColumn(GRAMS, fivegram_col(F.col(TOK_H), n))
@@ -180,11 +175,9 @@ def with_stopword_langid(
     langid twin (reference_impl.langid); the pipeline's production langid
     is the classifier in functions/langid.py."""
     text = F.col(text_col)
-    toks = tokens_col(text)
-    df = df.withColumn(TOK_H, token_hash_col(toks))
     hit_cols = {lang: f"_sw_{lang}" for lang in LANGS}
     for lang, c in hit_cols.items():
-        df = df.withColumn(c, stopword_hits_hashed(F.col(TOK_H), lang))
+        df = df.withColumn(c, stopword_count(text, lang))
     best = F.greatest(*[F.col(c) for c in hit_cols.values()])
     cascade = F.when(best <= 0, F.lit(UNKNOWN_LANG))
     for lang in LANGS:
@@ -197,7 +190,7 @@ def with_stopword_langid(
         # NULL-text rows made the two engines' confusion matrices diverge).
         F.when(text.isNotNull(), cascade.otherwise(F.lit(UNKNOWN_LANG)))
         .otherwise(F.lit(UNKNOWN_LANG)),
-    ).drop(TOK_H, *hit_cols.values())
+    ).drop(*hit_cols.values())
 
 
 def keep_expr() -> Column:

@@ -12,8 +12,8 @@ called by BOTH the reference labeler and the pandas UDF here — float parity
 by construction, the same one-code-path discipline as the perplexity stage.
 
 Scale posture: training is a map-side partial bag-of-buckets reduction
-(mapInPandas emitting per-batch dense count matrices, ~L x 4096 ints per
-batch) + one tiny shuffle on (lang, bucket); the collected table is
+(mapInPandas emitting per-partition dense count matrices, ~L x 4096 ints
+per partition) + one tiny shuffle on (lang, bucket); the collected table is
 model-sized (<= |langs| x LANGID_BUCKETS) by construction — never
 corpus-sized. Scoring is map-only with the model riding one broadcast
 variable.
@@ -42,17 +42,18 @@ def train_langid_distributed(
     """(lang, text) DataFrame -> NB model, identical to
     reference_impl.train_langid on the same rows.
 
-    Each Arrow batch reduces to at most |langs-in-batch| x BUCKETS count
-    rows BEFORE the shuffle (the map-side combine), so shuffle traffic is
-    bounded by model size x batches, independent of corpus size.
+    Each partition reduces to at most |langs-in-partition| x BUCKETS count
+    rows BEFORE the shuffle (the map-side combine, summed across all of
+    the partition's Arrow batches), so shuffle traffic is bounded by model
+    size x partitions, independent of corpus size and of batch size.
     """
 
     def count_batches(
         pdfs: Iterator[pd.DataFrame],
     ) -> Iterator[pd.DataFrame]:
+        acc: dict[str, np.ndarray] = {}
+        docs: dict[str, int] = {}
         for pdf in pdfs:
-            acc: dict[str, np.ndarray] = {}
-            docs: dict[str, int] = {}
             for lang, text in zip(pdf[lang_col], pdf[text_col]):
                 if text is None:
                     continue
@@ -61,32 +62,32 @@ def train_langid_distributed(
                     docs[lang] = 0
                 acc[lang] += langid_bucket_counts(text)
                 docs[lang] += 1
-            out = []
-            for lang, vec in acc.items():
-                nz = np.nonzero(vec)[0]
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "lang": lang,
-                            "bucket": nz.astype("int64"),
-                            "cnt": vec[nz],
-                            "docs": 0,
-                        }
-                    )
+        out = []
+        for lang, vec in acc.items():
+            nz = np.nonzero(vec)[0]
+            out.append(
+                pd.DataFrame(
+                    {
+                        "lang": lang,
+                        "bucket": nz.astype("int64"),
+                        "cnt": vec[nz],
+                        "docs": 0,
+                    }
                 )
-                out.append(
-                    pd.DataFrame(
-                        {
-                            "lang": [lang],
-                            "bucket": [-1],
-                            "cnt": [0],
-                            "docs": [docs[lang]],
-                        }
-                    )
-                )
-            yield pd.concat(out) if out else pd.DataFrame(
-                {"lang": [], "bucket": [], "cnt": [], "docs": []}
             )
+            out.append(
+                pd.DataFrame(
+                    {
+                        "lang": [lang],
+                        "bucket": [-1],
+                        "cnt": [0],
+                        "docs": [docs[lang]],
+                    }
+                )
+            )
+        yield pd.concat(out) if out else pd.DataFrame(
+            {"lang": [], "bucket": [], "cnt": [], "docs": []}
+        )
 
     partials = labeled.select(
         F.col(lang_col).alias(lang_col), F.col(text_col).alias(text_col)

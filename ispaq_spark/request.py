@@ -254,6 +254,7 @@ def run_request(
             raise ValueError("request has no input_path and no pages given")
         pages = spark.read.parquet(req.input_path)
     pages = select_pages(pages, req)
+    scrub_impl = req.preferences.get("scrub_impl") or "sql"
     salt = int(req.preferences.get("salt_buckets") or 0)
     if salt > 0:
         pages = salt_repartition(
@@ -267,11 +268,12 @@ def run_request(
             req.output_path,
             model=model,
             metric_sets=req.metric_sets,
+            scrub_impl=scrub_impl,
         )
     return run_pipeline(
         spark,
         pages,
         metric_sets=req.metric_sets,
         model=model,
-        scrub_impl=req.preferences.get("scrub_impl", "sql"),
+        scrub_impl=scrub_impl,
     )

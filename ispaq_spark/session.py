@@ -15,6 +15,21 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory() -> str:
+    """Half the host's memory (or of the cgroup limit, if lower), capped at
+    48g. Local mode runs every executor thread inside the driver JVM; the
+    other half stays free for the Python workers, off-heap Arrow buffers
+    and the OS — a heap larger than the host lets the JVM grow until the
+    kernel kills it."""
+    total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    try:
+        with open("/sys/fs/cgroup/memory.max") as f:
+            total = min(total, int(f.read()))
+    except (OSError, ValueError):  # no cgroup v2 file, or "max"
+        pass
+    return f"{max(512, min(48 * 1024, total // 2**21))}m"
+
+
 def get_spark(
     app_name: str = "ispaq_spark",
     master: str | None = None,
@@ -41,7 +56,9 @@ def get_spark(
         # Local mode runs all executor threads inside the driver JVM; the
         # default 1g heap makes GC the scaling bottleneck at 32 threads.
         # (On a real cluster spark-submit owns these.)
-        "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+        "spark.driver.memory": os.environ.get(
+            "SPARK_GRAFT_DRIVER_MEM", default_driver_memory()
+        ),
         # Throughput collector: this is a batch engine — pause times don't
         # matter, reclaim rate does. At 32 executor threads the regex/array
         # allocation churn made G1 the scaling bottleneck (600k-doc leg:
@@ -64,6 +81,13 @@ def get_spark(
         # (ispaq/irismustangmetrics.py:78-80), but columnar and batched.
         "spark.sql.execution.arrow.pyspark.enabled": "true",
         "spark.sql.execution.arrow.maxRecordsPerBatch": "4096",
+        # Byte cap per Arrow batch sent to Python UDFs (not toPandas /
+        # createDataFrame, which only the record cap bounds). It splits each
+        # task's input into many batches, so the Python worker scores batch
+        # k+1 while the task thread runs the JVM half of the stage
+        # (heuristics, scrub, write) on batch k. Value from a sweep on the
+        # default job (BENCH/BASELINE.md).
+        "spark.sql.execution.arrow.maxBytesPerBatch": "65536",
         # Sane scan granularity for wide binary/html columns at scale.
         "spark.sql.files.maxPartitionBytes": "128m",
         "spark.ui.showConsoleProgress": "false",

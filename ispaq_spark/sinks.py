@@ -159,6 +159,7 @@ def run_resumable(
     model: dict | None = None,
     metric_sets="default",
     sink: MetricSink | None = None,
+    scrub_impl: str = "sql",
 ) -> dict:
     """Compute + sink only the stale day partitions; returns a report
     {'computed': [...], 'skipped': [...]}. Drives any MetricSink backend
@@ -181,7 +182,11 @@ def run_resumable(
         subset = pages.where(
             F.date_format("warc_ts", "yyyy-MM-dd").isin(stale)
         )
-        sink.merge(run_pipeline(spark, subset, metric_sets, model))
+        sink.merge(
+            run_pipeline(
+                spark, subset, metric_sets, model, scrub_impl=scrub_impl
+            )
+        )
         sink.commit_snapshot({**seen, **fps})
     return {
         "computed": stale,

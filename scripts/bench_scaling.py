@@ -59,8 +59,7 @@ from ispaq_spark.synthesize import default_model
 
 cores = int(sys.argv[1]); path = sys.argv[2]
 spark = get_spark(app_name=f"scale{{cores}}", master=f"local[{{cores}}]",
-                  shuffle_partitions=cores,
-                  extra_conf={{"spark.driver.memory": "48g"}})
+                  shuffle_partitions=cores)
 spark.sparkContext.setLogLevel("ERROR")
 model = default_model()
 files = sorted(glob.glob(path + "/part-*.parquet"))

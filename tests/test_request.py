@@ -133,3 +133,37 @@ def test_run_request_without_sink_returns_df(spark):
     df = run_request(spark, req, pages=pages, model=default_model())
     assert df.count() == 60
     assert "word_count" in df.columns and "keep" not in df.columns
+
+
+def test_scrub_impl_preference_reaches_the_sink(spark, tmp_path):
+    """`scrub_impl: pandas` in the preference file drives the resumable
+    sink path of run_request, and writes the same sink as `sql`."""
+    pages = pages_df(spark, 120).cache()
+    pages.count()
+    sinks = {}
+    for impl in ("sql", "pandas"):
+        p = tmp_path / f"prefs_{impl}.txt"
+        p.write_text(
+            open(PREFS)
+            .read()
+            .replace("scrub_impl: sql", f"scrub_impl: {impl}")
+        )
+        out = str(tmp_path / f"metrics_{impl}")
+        req = build_request(str(p), metrics="default", output_path=out)
+        assert req.preferences["scrub_impl"] == impl
+        report = run_request(spark, req, pages=pages, model=default_model())
+        assert report["computed"]
+        sinks[impl] = spark.read.parquet(out)
+    assert sinks["sql"].count() == 120
+    assert sinks["sql"].exceptAll(sinks["pandas"]).count() == 0
+    assert sinks["pandas"].exceptAll(sinks["sql"]).count() == 0
+    pages.unpersist()
+
+
+def test_unknown_scrub_impl_fails_loudly(spark):
+    req = build_request(PREFS, metrics="scrubOnly")
+    req.preferences["scrub_impl"] = "python"
+    with pytest.raises(ValueError, match="sql.*pandas"):
+        run_request(
+            spark, req, pages=pages_df(spark, 10), model=default_model()
+        )
